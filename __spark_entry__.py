@@ -3673,7 +3673,7 @@ _R4_WINDOW = [
     "fuzzy_street", "fuzzy_city", "match_lineage",
 ]
 
-# Round-5 window: the 9 new round-5 operators, every entry whose code
+# Round-5 window: the 12 new round-5 operators, every entry whose code
 # path was touched this round (BPE empty-doc left join, polygon_geometry
 # multi-ring guard, generalized color-JPEG decoder, cents-parameterized
 # IVF family), the flagship cascade + geospatial core, and a rotation of
@@ -3683,7 +3683,7 @@ _R5_WINDOW = [
     "ivf_kmeans_centroids", "ann_topk_ivf_kmeans", "ann_recall_kmeans",
     "pq_codebooks", "ann_topk_ivf_pq", "ann_recall_pq",
     "asset_decode_layouts", "ann_topk_filtered", "ann_knn_join",
-    "ann_index_stats", "ann_index_append",
+    "ann_index_stats", "ann_index_append", "ann_nprobe_curve",
     # code paths touched in round 5 — re-verify
     "bpe_merges", "bpe_tokenize", "asset_decode_color",
     "asset_decode_real", "district_geometry", "enclave_geometry",
@@ -4534,8 +4534,9 @@ FROM kept"""
             f"{match_base} "
             "SELECT (cell >> 8) AS cell_bucket, MIN(cell) AS cell_min, MAX(cell) AS cell_max, "
             "COUNT(*) AS input_rows, CAST(COUNT(osm_id) AS BIGINT) AS matched_rows, "
-            "CAST(SUM(CASE WHEN osm_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS new_rows "
-            f"FROM (SELECT px.page_id, {_CELL} AS cell, b.osm_id "
+            "CAST(SUM(CASE WHEN osm_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS new_rows, "
+            "ROUND(MIN(distance), 2) AS dist_min, ROUND(MAX(distance), 2) AS dist_max "
+            f"FROM (SELECT px.page_id, {_CELL} AS cell, b.osm_id, b.distance "
             f"      FROM pages_x px LEFT JOIN best b ON px.page_id = b.page_id WHERE {_GEO_FILTER}) "
             "GROUP BY 1"
         ),

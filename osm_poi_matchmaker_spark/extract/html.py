@@ -159,11 +159,6 @@ def extract_javascript_variable(raw: bytes | str, varname: str, use_replace: boo
 
 
 @F.pandas_udf(T.StringType())
-def prettify_udf(html: pd.Series) -> pd.Series:
-    return html.map(prettify_html, na_action="ignore")
-
-
-@F.pandas_udf(T.StringType())
 def html_text_udf(html: pd.Series) -> pd.Series:
     return html.map(html_to_text, na_action="ignore")
 

@@ -1047,14 +1047,6 @@ def decode_video(data: bytes) -> list[np.ndarray]:
     return frames
 
 
-def resize_nearest(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize (gray or multichannel) — numpy indexing."""
-    h, w = pixels.shape[0], pixels.shape[1]
-    ys = (np.arange(out_h) * h // out_h).astype(np.int64)
-    xs = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return pixels[ys][:, xs]
-
-
 # ---------------------------------------------------------------------------
 # Deterministic media fixtures + exact-dyadic features.
 #

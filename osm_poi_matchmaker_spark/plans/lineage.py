@@ -19,10 +19,11 @@ BUCKET_SHIFT = 8
 
 
 def match_lineage(matched: DataFrame) -> DataFrame:
-    """Metrics rows over a match output that carries (cell_id, osm_id).
+    """Metrics rows over a match output that carries (cell_id, osm_id, distance).
 
     Returns one row per cell bucket: cell range, input rows, matched /
-    new counts, min/max match distance.
+    new counts, min/max match distance (meters, rounded to cm; NULL when
+    nothing in the bucket matched).
     """
     return (
         matched.withColumn("cell_bucket", F.shiftright(F.col("cell_id"), BUCKET_SHIFT))
@@ -33,5 +34,7 @@ def match_lineage(matched: DataFrame) -> DataFrame:
             F.count(F.lit(1)).alias("input_rows"),
             F.count("osm_id").alias("matched_rows"),
             F.sum(F.when(F.col("osm_id").isNull(), 1).otherwise(0)).alias("new_rows"),
+            F.round(F.min("distance"), 2).alias("dist_min"),
+            F.round(F.max("distance"), 2).alias("dist_max"),
         )
     )

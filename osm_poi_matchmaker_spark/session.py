@@ -62,7 +62,3 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Load driver-generated parquet tables from ``sf_dir`` as DataFrames."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

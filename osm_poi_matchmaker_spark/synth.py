@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .sqltext import sql_string
+
 # ---------------------------------------------------------------------------
 # Brand dimension (analogue of poi_common, dao/data_structure.py:319-341)
 # poi_type drives the tag predicate (utils/poitypes.py:15-96 analogue);
@@ -98,11 +100,7 @@ def poi_common_df(spark: SparkSession) -> DataFrame:
     """
 
     def lit(v):
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        return str(int(v))
+        return str(int(v)) if isinstance(v, int) else sql_string(v)
 
     rows = ", ".join("(" + ", ".join(lit(v) for v in row) + ")" for row in BRANDS)
     cols = ", ".join(COMMON_SCHEMA.fieldNames())

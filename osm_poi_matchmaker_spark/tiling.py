@@ -60,10 +60,6 @@ def cell_id(lat: Column, lon: Column) -> Column:
     return cell_y(lat) * F.lit(X_SPAN) + cell_x(lon)
 
 
-def cell_of(df: DataFrame, lat: str = "lat", lon: str = "lon", out: str = "cell_id") -> DataFrame:
-    return df.withColumn(out, cell_id(F.col(lat), F.col(lon)))
-
-
 def kring_k_for_radius(radius_m: float) -> int:
     """Smallest k such that a k-ring of cells covers a metric radius.
 
@@ -72,34 +68,6 @@ def kring_k_for_radius(radius_m: float) -> int:
     is property-tested in tests/test_tiling.py.
     """
     return int(math.ceil(radius_m / MIN_CELL_METERS)) + 1
-
-
-def kring_cells(cell: Column, k: int) -> Column:
-    """Array of the (2k+1)^2 cell ids within Chebyshev distance k.
-
-    Built-in ``sequence``/``transform``/``flatten`` — stays inside
-    whole-stage codegen, no Python.
-    """
-    dxs = F.sequence(F.lit(-k), F.lit(k))
-    return F.flatten(
-        F.transform(
-            dxs,
-            lambda dy: F.transform(F.sequence(F.lit(-k), F.lit(k)), lambda dx: cell + dy * F.lit(X_SPAN) + dx),
-        )
-    )
-
-
-def explode_kring(
-    df: DataFrame, cell_col: str = "cell_id", k: int = 1, out: str = "probe_cell"
-) -> DataFrame:
-    """Explode each row into its k-ring: the probe side of a cell join.
-
-    Fan-out is (2k+1)^2 rows; at radius 300 m (reference distance_perfect,
-    ``utils/config.py:241-295``) k=4 → 81 cells. On the 100 TB path the
-    probe side is the smaller, already-filtered geotagged subset, and the
-    join key (probe_cell) aligns with the candidate table's layout.
-    """
-    return df.withColumn(out, F.explode(kring_cells(F.col(cell_col), k)))
 
 
 # ---------------------------------------------------------------------------
@@ -188,22 +156,6 @@ def coarse_ring_spec(radius_m: float, max_lat: float = 48.6) -> tuple[int, int]:
         MAX_LON_METERS_PER_DEG / mult
     ) * math.cos(math.radians(max_lat)) / math.cos(math.radians(48.6))
     return mult, int(radius_m // pitch_at_lat) + 1
-
-
-def explode_ringk(
-    df: DataFrame, lat: str, lon: str, mult: int, k: int, out: str = "probe_cell"
-) -> DataFrame:
-    """(2k+1)×(2k+1) ring around the row's coarse cell — the general
-    form of :func:`explode_ring3x3` for radii beyond the grid pitch."""
-    cell = coarse_cell_id(F.col(lat), F.col(lon), mult)
-    offsets = F.array(
-        *[
-            F.lit(dy * X_SPAN + dx)
-            for dy in range(-k, k + 1)
-            for dx in range(-k, k + 1)
-        ]
-    )
-    return df.withColumn(out, F.explode(F.transform(offsets, lambda o: cell + o)))
 
 
 def explode_ring3x3_of_cell(df: DataFrame, cell: str, out: str) -> DataFrame:

@@ -29,7 +29,8 @@ def test_pipeline_runs_and_resumes(spark, tmp_path):
     lineage = spark.read.parquet(os.path.join(root, "match", "lineage"))
     assert lineage.count() > 0
     cols = set(lineage.columns)
-    assert {"cell_bucket", "cell_min", "cell_max", "input_rows", "matched_rows"} <= cols
+    assert {"cell_bucket", "cell_min", "cell_max", "input_rows", "matched_rows",
+            "dist_min", "dist_max"} <= cols
 
     # manifest sanity
     with open(os.path.join(root, "match", "manifest.json")) as f:

@@ -1,11 +1,13 @@
 """Physical-plan hygiene: these tests fail if a code change silently
-regresses scan pushdown, column pruning, or the broadcast of the brand
-dimension — the properties that make the plans survive a 100× scale-up."""
+regresses scan pushdown, column pruning, or the match cascade's single
+broadcast join — the properties that make the plans survive a 100×
+scale-up."""
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 
 sys.path.insert(0, "/root/repo")
@@ -31,11 +33,88 @@ def test_geotag_pushdown_and_pruning(spark):
     assert "warc_ts" not in read_schema
 
 
-def test_match_broadcasts_brand_dim(spark):
-    plan = plan_of(entry_mod._q_match_cascade(spark, SF), mode="simple")
-    assert "BroadcastHashJoin" in plan
-    # the cascade must not degenerate into an unconstrained cross join
+def _cascade(spark, **kw):
+    from osm_poi_matchmaker_spark import synth
+    from osm_poi_matchmaker_spark.operators.match import match_cascade
+
+    return match_cascade(
+        entry_mod._pages_geo(spark, SF), synth.osm_pois(spark, SF),
+        synth.poi_common_df(spark), brand_rows=synth.BRAND_ROWS, **kw,
+    )
+
+
+def test_match_is_one_tagged_key_broadcast_join(spark):
+    # the cascade behind _q_match_cascade is ONE broadcast equi-join on the
+    # tagged key (arm, ks, cell, pc): no brand-dim join, no per-arm joins,
+    # no cross join. (The page ⟕ best outcome join match_pages adds on
+    # top is left to AQE, which broadcasts it at this size.)
+    plan = plan_of(_cascade(spark), mode="simple")
+    assert plan.count("BroadcastHashJoin") == 1, plan
     assert "CartesianProduct" not in plan
+    # the Generate feeding the join (probe side, printed first) is the
+    # ring explode producing the probe-side cell key
+    lines = plan.splitlines()
+    i = next(n for n, line in enumerate(lines) if "BroadcastHashJoin" in line)
+    key = re.search(
+        r"BroadcastHashJoin \[arm#\d+, ks#\d+, (probe_cell#\d+L), pc#\d+\]", lines[i]
+    )
+    assert key, lines[i]
+    gen = next(line for line in lines[i + 1:] if "Generate" in line)
+    assert gen.rstrip().endswith(f"[{key.group(1)}]"), gen
+
+
+def test_match_planet_no_candidate_broadcast(spark):
+    # the cascade _match_planet is built from (broadcast_candidates=False,
+    # bounded name arms): with auto-broadcast off, as planet-scale
+    # candidate stats force, the tagged-key join is a shuffle join and
+    # nothing broadcasts
+    thresholds = ("spark.sql.autoBroadcastJoinThreshold",
+                  "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in thresholds}
+    try:
+        for k in thresholds:
+            spark.conf.set(k, "-1")
+        plan = plan_of(
+            _cascade(spark, broadcast_candidates=False,
+                     name_arm_radius_m=entry_mod._BOUND_RADIUS_M),
+            mode="simple",
+        )
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "BroadcastExchange" not in plan, plan
+    joins = [line for line in plan.splitlines() if "Join [arm#" in line]
+    assert joins and all("SortMergeJoin" in j or "ShuffledHashJoin" in j for j in joins)
+
+
+def test_match_build_py4j_ceiling(spark):
+    # building the cascade plan must stay cheap: brand literals, regexes
+    # and key arrays are SQL text (one JVM round trip per parse), not
+    # Column trees (one per node). The count is deterministic (~400 at
+    # sf0.001); a Column tree per brand and arm runs to ~10^4.
+    from osm_poi_matchmaker_spark import synth
+    from osm_poi_matchmaker_spark.operators.match import match_pages
+
+    pages_geo = entry_mod._pages_geo(spark, SF)
+    pois, common = synth.osm_pois(spark, SF), synth.poi_common_df(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting_send(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting_send
+    try:
+        match_pages(pages_geo, pois, common, brand_rows=synth.BRAND_ROWS)
+    finally:
+        client.send_command = send
+    assert calls <= 2500, calls
 
 
 def test_knn_no_cartesian(spark):
